@@ -1,5 +1,7 @@
 package graft
 
+import graft.engine.Engine
+
 /** Measures the REAL retained bytes per AggFold byPk entry — the
   * driver-heap model behind Engine.aggFoldEntryBytes / statsAggHotCap
   * (r22, r21 verdict item 6). Builds the exact structure AggFold keeps
@@ -34,7 +36,7 @@ object FoldMemProbe {
     }
     val after = settledUsed()
     val per = (after - before).toDouble / n
-    val model = 124L + 9L * k
+    val model = Engine.aggFoldEntryBytes(k)
     println(f"n=$n%d k=$k%d measured=${per}%.0f B/entry model=$model B/entry")
     require(m.size == n) // keep the map reachable until after the measure
     (per, model)

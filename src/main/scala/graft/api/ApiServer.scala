@@ -31,6 +31,13 @@ import graft.engine.{Engine, EngineStats, ResultSet}
   */
 final class ApiServer(engine: Engine, port: Int = 0) {
 
+  // The JDK server writes response headers and body as two TCP
+  // segments; with Nagle on, the body waits for the client's delayed
+  // ACK (~40 ms per keep-alive request). The JDK reads this property
+  // once per JVM, at its first HttpServer.create, so it must be set
+  // before that; putIfAbsent leaves an explicit setting alone.
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   private val startNanos = System.nanoTime()
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(8)

@@ -1,13 +1,20 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.values.bloomfilter.BloomFilter
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side cold point lookup — the analogue of the reference's
@@ -20,12 +27,15 @@ import org.apache.spark.sql.SparkSession
   * their metadata is cached per path (the reference caches a bloom
   * filter + sparse index per SSTable for the same reason,
   * sstable.hpp): the Hadoop conf, each tier's file listing, and each
-  * file's pk min/max from its footer stats. A lookup then touches the
-  * footer-parse + page-decode path ONLY for files whose pk range
-  * covers the key — every other file is excluded without I/O. Per-file
-  * verdicts are additionally LRU row-cached (the block-cache role), so
-  * repeat reads of warm keys never touch the filesystem, and tier
-  * files carry a pk bloom filter so in-range misses skip the decode.
+  * file's parsed footer, pk min/max and pk bloom filter. A file that
+  * cannot hold the key is rejected in memory — first by its pk range,
+  * then by one bloom probe — so in-range misses cost no I/O at all.
+  * Only the file that holds the key is opened: with the cached footer
+  * (no footer read, no per-call Hadoop setup), and the column-index
+  * page filter decodes just the page holding the key — tier pages are
+  * capped at [[tierPageRows]] rows. Per-file verdicts are additionally
+  * LRU row-cached (the block-cache role), so repeat reads of warm keys
+  * never touch the filesystem.
   *
   * LWW across tiers: tiers are age-ordered in `coldDirs` (flush
   * drains hot rows whose seqs exceed everything flushed before, and a
@@ -48,18 +58,12 @@ object ColdPointReader {
       case _ => false
     }
 
-  private def pkPredicate(m: TableMeta, pk: Any): FilterPredicate = {
-    val name = m.cols(m.pkIndex).name
-    m.cols(m.pkIndex).tpe match {
-      case ColType.I64 | ColType.Ts =>
-        FilterApi.eq(FilterApi.longColumn(name), java.lang.Long.valueOf(pk.asInstanceOf[Long]))
-      case ColType.I32 =>
-        FilterApi.eq(FilterApi.intColumn(name), java.lang.Integer.valueOf(pk.asInstanceOf[Int]))
-      case ColType.Str =>
-        FilterApi.eq(FilterApi.binaryColumn(name), Binary.fromString(pk.asInstanceOf[String]))
-      case t => throw new IllegalArgumentException(s"unsupported pk type $t")
-    }
-  }
+  /** Row cap of one parquet page in every tier file, set by both tier
+    * writers (flush and compaction). A point read decodes the one page
+    * the column index names for the key, so this bounds its decode to
+    * ~1k rows per column instead of parquet's 20k-row default.
+    */
+  val tierPageRows = 1024
 
   // ---- observability (spec gates, not hot-path logic) -----------------------
 
@@ -89,10 +93,16 @@ object ColdPointReader {
       c
     }
 
-  /** pk min/max of one tier file, from its footer row-group stats;
-    * None when stats are absent (then the file must be read).
+  /** One immutable tier file's cached read state: its input handle
+    * and parsed footer (a lookup opens the file without re-reading
+    * either), the pk min/max from the footer row-group stats (None when
+    * stats are absent), and the in-memory pk bloom gate (None when a
+    * row group has no bloom or the pk's physical type has no matching
+    * hash — then only the range prunes).
     */
-  private final case class FileMeta(path: Path, range: Option[(Any, Any)])
+  private final case class FileMeta(input: HadoopInputFile, footer: ParquetMetadata,
+                                    range: Option[(Any, Any)],
+                                    bloom: Option[Any => Boolean])
 
   private val tierCache =
     scala.collection.concurrent.TrieMap.empty[String, Vector[FileMeta]]
@@ -199,29 +209,11 @@ object ColdPointReader {
         val listing = fs.listStatus(d).toVector
           .filter(_.getPath.getName.endsWith(".parquet"))
           .map { st =>
-            val range =
-              try {
-                footersParsed.incrementAndGet()
-                val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-                try {
-                  import scala.jdk.CollectionConverters._
-                  val stats = r.getFooter.getBlocks.asScala.toVector.flatMap { b =>
-                    b.getColumns.asScala.find(
-                      _.getPath.toDotString == m.cols(m.pkIndex).name)
-                      .filter(c => c.getStatistics != null && !c.getStatistics.isEmpty
-                        && c.getStatistics.hasNonNullValue)
-                      .map(_.getStatistics)
-                  }
-                  if (stats.isEmpty) None
-                  else {
-                    val mins = stats.map(s => statValue(m, s.genericGetMin))
-                    val maxs = stats.map(s => statValue(m, s.genericGetMax))
-                    Some((mins.minBy(identity)(ordering(m)),
-                      maxs.maxBy(identity)(ordering(m))))
-                  }
-                } finally r.close()
-              } catch { case _: java.io.IOException => None }
-            FileMeta(st.getPath, range)
+            footersParsed.incrementAndGet()
+            val input = HadoopInputFile.fromStatus(st, conf)
+            val r = ParquetFileReader.open(input, HadoopReadOptions.builder(conf).build())
+            try FileMeta(input, r.getFooter, pkRange(m, r.getFooter), bloomGate(m, r))
+            finally r.close()
           }
         // cache only dirs the GC has not retired, and double-check
         // after the insert: evictTiers marks `retired` before clearing
@@ -234,6 +226,55 @@ object ColdPointReader {
         listing
       }
     }
+
+  private def pkChunks(m: TableMeta, footer: ParquetMetadata) =
+    footer.getBlocks.asScala.toVector.map(
+      _.getColumns.asScala.find(_.getPath.toDotString == m.cols(m.pkIndex).name))
+
+  /** pk min/max over the file's row groups, from the footer stats. */
+  private def pkRange(m: TableMeta, footer: ParquetMetadata): Option[(Any, Any)] = {
+    val stats = pkChunks(m, footer).flatMap(_
+      .filter(c => c.getStatistics != null && !c.getStatistics.isEmpty
+        && c.getStatistics.hasNonNullValue)
+      .map(_.getStatistics))
+    if (stats.isEmpty) None
+    else {
+      val mins = stats.map(s => statValue(m, s.genericGetMin))
+      val maxs = stats.map(s => statValue(m, s.genericGetMax))
+      Some((mins.minBy(identity)(ordering(m)), maxs.maxBy(identity)(ordering(m))))
+    }
+  }
+
+  /** "May this file hold pk?" from the pk bloom filters of all its row
+    * groups, read once here and probed in memory from then on.
+    */
+  private def bloomGate(m: TableMeta, r: ParquetFileReader): Option[Any => Boolean] = {
+    val probes = pkChunks(m, r.getFooter).map(_.flatMap(c =>
+      Option(r.readBloomFilter(c)).flatMap(
+        bloomProbe(m, c.getPrimitiveType.getPrimitiveTypeName, _))))
+    if (probes.exists(_.isEmpty)) None
+    else Some(pk => probes.exists(_.get(pk)))
+  }
+
+  /** The writer hashed the pk's PHYSICAL value, so the probe must hash
+    * the same representation; a (logical, physical) pair without a
+    * known match gets no probe rather than a false negative.
+    */
+  private def bloomProbe(m: TableMeta, physical: PrimitiveTypeName,
+                         bf: BloomFilter): Option[Any => Boolean] = {
+    val hash: Any => Long = (m.cols(m.pkIndex).tpe, physical) match {
+      case (ColType.I64 | ColType.Ts, PrimitiveTypeName.INT64) =>
+        pk => bf.hash(pk.asInstanceOf[Long])
+      case (ColType.I32, PrimitiveTypeName.INT32) =>
+        pk => bf.hash(pk.asInstanceOf[Int])
+      case (ColType.Str, PrimitiveTypeName.BINARY) =>
+        pk => bf.hash(Binary.fromString(pk.asInstanceOf[String]))
+      case _ => return None
+    }
+    // BlockSplitBloomFilter's hash and findHash share mutable scratch
+    // buffers: unsynchronized concurrent probes return false negatives
+    Some(pk => bf.synchronized(bf.findHash(hash(pk))))
+  }
 
   /** Stats are kept in their parquet-comparable representation: Str
     * stays raw UTF-8 bytes, because parquet UTF8 min/max are ordered by
@@ -265,52 +306,25 @@ object ColdPointReader {
   })
 
   private def mayContain(fm: FileMeta, m: TableMeta, pk: Any): Boolean =
-    fm.range match {
-      case None             => true // no stats: must read
-      case Some((lo, hi))   =>
-        val ord = ordering(m)
-        val k = statKey(m, pk)
-        ord.lteq(lo, k) && ord.lteq(k, hi)
-    }
+    fm.range.forall { case (lo, hi) =>
+      val ord = ordering(m)
+      val k = statKey(m, pk)
+      ord.lteq(lo, k) && ord.lteq(k, hi)
+    } && fm.bloom.forall(_(pk))
 
   /** Latest cold version of `pk` across `coldDirs` (tombstones
     * included — the caller interprets), or None if no tier holds it.
     */
   def lookup(spark: SparkSession, m: TableMeta, coldDirs: Seq[String],
-             pk: Any): Option[RowVersion] = {
-    val conf = confOf(spark)
-    val filter = FilterCompat.get(pkPredicate(m, pk))
-    // newest tier first — the first tier containing the key holds its
-    // latest version (age-order invariant, scaladoc above)
-    val it = coldDirs.reverseIterator
-    while (it.hasNext) {
-      val dir = it.next()
-      // within one tier a pk occurs at most once (flush writes the
-      // latest-version map; merges dedup), but keep max-seq across the
-      // tier's files anyway — robustness over assumption
-      var best: Option[RowVersion] = None
-      tierFiles(conf, m, dir).foreach { fm =>
-        if (mayContain(fm, m, pk)) {
-          val verdict = cachedFileLookup(conf, m, filter, fm, pk)
-          verdict.foreach(rv => if (best.forall(_.seq < rv.seq)) best = Some(rv))
-        }
-      }
-      if (best.isDefined) return best
-    }
-    None
-  }
+             pk: Any): Option[RowVersion] =
+    lookupMany(spark, m, coldDirs, Seq(pk)).get(pk)
 
-  /** Batched latest-cold-version resolution for MANY pks (r19 — the
-    * incremental aggregate fold resolves its whole write delta here):
-    * ONE reader open per candidate tier file instead of one per
-    * (pk × file). Under a write burst whose ids overlap existing tier
-    * ranges, the per-pk path paid a fresh ParquetReader open (footer
-    * parse + row-group elimination) per miss — reader-open-bound at
-    * hundreds of µs per pk; the batched pass amortizes the open across
-    * the delta with one IN predicate. Verdicts (positive AND negative)
-    * land in the same per-file row cache the single-pk path uses, so
-    * the two paths stay coherent. Age-order contract identical to
-    * [[lookup]]: newest tier containing a pk wins.
+  /** Latest cold version of each of `pks` (the incremental aggregate
+    * fold resolves its whole write delta here): newest tier first — the
+    * first tier containing a pk holds its latest version (age-order
+    * invariant, scaladoc above) — and ONE file read per candidate file
+    * for all of its uncached pks. Verdicts (positive AND negative) land
+    * in the per-file row cache.
     */
   def lookupMany(spark: SparkSession, m: TableMeta, coldDirs: Seq[String],
                  pks: Seq[Any]): Map[Any, RowVersion] = {
@@ -321,23 +335,27 @@ object ColdPointReader {
     val it = coldDirs.reverseIterator
     while (it.hasNext && remaining.nonEmpty) {
       val dir = it.next()
+      // within one tier a pk occurs at most once (flush writes the
+      // latest-version map; merges dedup), but keep max-seq across the
+      // tier's files anyway — robustness over assumption
       val tierBest = scala.collection.mutable.HashMap.empty[Any, RowVersion]
       def offer(pk: Any, rv: RowVersion): Unit =
         if (tierBest.get(pk).forall(_.seq < rv.seq)) tierBest(pk) = rv
       tierFiles(conf, m, dir).foreach { fm =>
-        val cands = remaining.filter(pk => mayContain(fm, m, pk))
-        if (cands.nonEmpty) {
-          val uncached = cands.filter { pk =>
-            val hit = rowCache.synchronized(rowCache.get((fm.path.toString, pk)))
-            if (hit != null) { hit.foreach(offer(pk, _)); false } else true
-          }
-          if (uncached.nonEmpty) {
-            val found = bulkFileLookup(conf, m, fm, uncached)
-            uncached.foreach { pk =>
-              val v = found.get(pk)
-              rowCache.synchronized(rowCache.put((fm.path.toString, pk), v))
-              v.foreach(offer(pk, _))
-            }
+        // key invariant relied on by evictTiers' cheap prefix match:
+        // the path came from FileSystem.listStatus, which returns
+        // fully-qualified, normalized paths (file:/abs/... on local FS)
+        val file = fm.input.getPath.toString
+        val uncached = remaining.filter(pk => mayContain(fm, m, pk)).filter { pk =>
+          val hit = rowCache.synchronized(rowCache.get((file, pk)))
+          if (hit != null) { hit.foreach(offer(pk, _)); false } else true
+        }
+        if (uncached.nonEmpty) {
+          val found = readFile(conf, m, fm, uncached)
+          uncached.foreach { pk =>
+            val v = found.get(pk)
+            rowCache.synchronized(rowCache.put((file, pk), v))
+            v.foreach(offer(pk, _))
           }
         }
       }
@@ -347,74 +365,65 @@ object ColdPointReader {
     resolved.toMap
   }
 
-  /** One file, many pks, ONE reader pass (IN predicate). Per-pk
-    * max-seq kept like the single-pk path.
+  /** Every version of `pks` in one file, max-seq per pk. The cached
+    * footer opens the file without re-reading it; the row-group stats,
+    * dictionary and bloom filters are off (the in-memory gates already
+    * chose this file), while the column-index page filter and the
+    * record filter decode only pages that can hold a wanted pk.
+    * `HadoopInputFile` keeps checksum-FS verification on the read.
     */
-  private def bulkFileLookup(conf: org.apache.hadoop.conf.Configuration,
-                             m: TableMeta, fm: FileMeta,
-                             pks: Iterable[Any]): Map[Any, RowVersion] = {
+  private def readFile(conf: org.apache.hadoop.conf.Configuration,
+                       m: TableMeta, fm: FileMeta,
+                       pks: Set[Any]): Map[Any, RowVersion] = {
     dataFilesOpened.incrementAndGet()
+    val filter = FilterCompat.get(pkFilter(m, pks))
+    // options per read: each builds its own CodecFactory, which the
+    // reader releases on close — one shared across threads corrupts pages
+    val options = HadoopReadOptions.builder(conf)
+      .useStatsFilter(false).useDictionaryFilter(false).useBloomFilter(false)
+      .withRecordFilter(filter).build()
+    val schema = fm.footer.getFileMetaData.getSchema
+    val columnIO = new ColumnIOFactory(fm.footer.getFileMetaData.getCreatedBy)
+      .getColumnIO(schema)
     val out = scala.collection.mutable.HashMap.empty[Any, RowVersion]
-    val reader = ParquetReader.builder(new GroupReadSupport(), fm.path)
-      .withConf(conf).withFilter(FilterCompat.get(pkInPredicate(m, pks))).build()
+    val stream = fm.input.newStream()
+    val reader =
+      try new ParquetFileReader(fm.input, fm.footer, options, stream)
+      catch { case t: Throwable => stream.close(); throw t }
     try {
-      var g = reader.read()
-      while (g != null) {
-        val rv = toRowVersion(g, m)
-        val pk = rv.values(m.pkIndex)
-        if (out.get(pk).forall(_.seq < rv.seq)) out(pk) = rv
-        g = reader.read()
+      var pages = reader.readNextFilteredRowGroup()
+      while (pages != null) {
+        val records = columnIO.getRecordReader(pages, new GroupRecordConverter(schema), filter)
+        var i = 0L
+        while (i < pages.getRowCount) {
+          val g = records.read() // null: the record filter rejected the row
+          if (g != null) {
+            val rv = toRowVersion(g, m)
+            val pk = rv.values(m.pkIndex)
+            if (out.get(pk).forall(_.seq < rv.seq)) out(pk) = rv
+          }
+          i += 1
+        }
+        pages = reader.readNextFilteredRowGroup()
       }
     } finally reader.close()
     out.toMap
   }
 
-  private def pkInPredicate(m: TableMeta, pks: Iterable[Any]): FilterPredicate = {
-    import scala.jdk.CollectionConverters._
+  private def pkFilter(m: TableMeta, pks: Set[Any]): FilterPredicate = {
     val name = m.cols(m.pkIndex).name
     m.cols(m.pkIndex).tpe match {
       case ColType.I64 | ColType.Ts =>
         FilterApi.in(FilterApi.longColumn(name),
-          pks.map(pk => java.lang.Long.valueOf(pk.asInstanceOf[Long])).toSet.asJava)
+          pks.map(pk => java.lang.Long.valueOf(pk.asInstanceOf[Long])).asJava)
       case ColType.I32 =>
         FilterApi.in(FilterApi.intColumn(name),
-          pks.map(pk => java.lang.Integer.valueOf(pk.asInstanceOf[Int])).toSet.asJava)
+          pks.map(pk => java.lang.Integer.valueOf(pk.asInstanceOf[Int])).asJava)
       case ColType.Str =>
         FilterApi.in(FilterApi.binaryColumn(name),
-          pks.map(pk => Binary.fromString(pk.asInstanceOf[String])).toSet.asJava)
+          pks.map(pk => Binary.fromString(pk.asInstanceOf[String])).asJava)
       case t => throw new IllegalArgumentException(s"unsupported pk type $t")
     }
-  }
-
-  /** One immutable file's verdict for `pk`, LRU-cached (negative
-    * results included — a definitive "not in this file" is as
-    * cacheable as a hit).
-    */
-  private def cachedFileLookup(conf: org.apache.hadoop.conf.Configuration,
-                               m: TableMeta, filter: FilterCompat.Filter,
-                               fm: FileMeta, pk: Any): Option[RowVersion] = {
-    // key invariant relied on by evictTiers' cheap prefix match:
-    // fm.path came from FileSystem.listStatus, which returns
-    // fully-qualified, normalized paths (file:/abs/... on local FS) —
-    // eviction handles authority / non-absolute forms with a slower
-    // fallback, but this is the shape that must stay canonical
-    val key = (fm.path.toString, pk)
-    val hit = rowCache.synchronized(rowCache.get(key))
-    if (hit != null) return hit
-    dataFilesOpened.incrementAndGet()
-    var best: Option[RowVersion] = None
-    val reader = ParquetReader.builder(new GroupReadSupport(), fm.path)
-      .withConf(conf).withFilter(filter).build()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        val rv = toRowVersion(g, m)
-        if (best.forall(_.seq < rv.seq)) best = Some(rv)
-        g = reader.read()
-      }
-    } finally reader.close()
-    rowCache.synchronized(rowCache.put(key, best))
-    best
   }
 
   private def toRowVersion(g: Group, m: TableMeta): RowVersion = {

@@ -386,7 +386,8 @@ final class Engine(
             .sortWithinPartitions(col(m.pk)) // pk-sorted files → parquet row-group
             .write.mode("overwrite")         //   min/max pruning on pk scans
             // pk bloom filter per tier file — the SSTable bloom (SURVEY C1):
-            // in-range point MISSES skip the row-group decode entirely.
+            // cached in memory by ColdPointReader, so in-range point
+            // MISSES reject the file without opening it.
             // NDV-sized: without it parquet allocates its 1 MiB maximum
             // per file, which dwarfs a small flush tier's data (measured
             // ~1.05 MiB constant on a 2k-row tier); the exact live-row
@@ -394,6 +395,8 @@ final class Engine(
             .option(s"parquet.bloom.filter.enabled#${m.pk}", "true")
             .option(s"parquet.bloom.filter.expected.ndv#${m.pk}",
               math.max(1, rows.size).toString)
+            // point reads decode one page: see ColdPointReader.tierPageRows
+            .option("parquet.page.row.count.limit", ColdPointReader.tierPageRows.toString)
             .parquet(tier)
           // phase 3 — COMMIT: swap the tier in; retain only rows
           // written DURING the flush job
@@ -1067,6 +1070,7 @@ final class Engine(
     laid.write.mode("overwrite")
       .option(s"parquet.bloom.filter.enabled#${m.pk}", "true")
       .option(s"parquet.bloom.filter.expected.ndv#${m.pk}", ndv.toString)
+      .option("parquet.page.row.count.limit", ColdPointReader.tierPageRows.toString)
       .parquet(target)
   }
 
@@ -1588,13 +1592,13 @@ final class Engine(
     if (misses.isEmpty || store.coldDirs.isEmpty) hotLive
     else {
       // a handful of cold misses seek via the direct point reader
-      // (~ms each, no job); larger miss sets amortize better as ONE
-      // IN-filter Spark scan
+      // (no job); larger miss sets amortize better as ONE IN-filter
+      // Spark scan
       val coldHits =
         if (misses.size <= 8 && ColdPointReader.supportedPk(m)) {
           val tiers = store.synchronized(store.coldDirs)
-          misses.flatMap(pk => ColdPointReader.lookup(spark, m, tiers, pk)
-            .filterNot(_.tombstone).map(rv => pk -> rv.values)).toMap
+          ColdPointReader.lookupMany(spark, m, tiers, misses)
+            .collect { case (pk, rv) if !rv.tombstone => pk -> rv.values }
         } else retryOnBlockLoss {
           // cached snapshot (steady-state batch reads must not re-plan
           // the merge per call); the action holds no scan lease, so a
@@ -2066,7 +2070,7 @@ final class Engine(
         // AND-nested pk= goes to the scan path). Hot map first — hot
         // versions are strictly newer than anything flushed — then
         // the cold tiers via the direct parquet point reader (no
-        // Spark job; row groups pruned by pk min/max footer stats).
+        // Spark job; files pruned in memory by pk range and bloom).
         pointLookupKey(store, s.where) match {
           case Some(pk) if store.coldDirs.isEmpty || ColdPointReader.supportedPk(m) =>
             opReads.incrementAndGet()
@@ -2149,18 +2153,6 @@ final class Engine(
 
   private[graft] var statsAggEnabled = true
 
-  /** Estimated retained bytes per [[AggFold]] byPk entry at `numCols`
-    * numeric columns: HashMap.Entry + boxed Long key + Tuple3 + the
-    * hash table's own growth slack (~180 fixed) plus Array[Boolean]
-    * (1 B/col) + Array[Double] (8 B/col). Constants fit MEASUREMENT,
-    * not just object-layout arithmetic — graft.FoldMemProbe (post-GC
-    * heap deltas over the exact AggFold structure) measured
-    * 194 B/entry at k=2 (model 198), 459 at k=32 (468), 9234 at
-    * k=1000 (9180): within ±2% everywhere that matters.
-    */
-  private[graft] def aggFoldEntryBytes(numCols: Int): Long =
-    180L + 9L * numCols
-
   /** Hot stores past this size pay the Spark path instead of a
     * driver fold (normally unreachable: hotLimit flushes far below).
     * Raised 1M → 4M (r20): the caps predate the incremental AggFold,
@@ -2185,11 +2177,11 @@ final class Engine(
     * disable the stats path entirely below one flush of backlog.
     */
   private[graft] val statsAggFoldBudgetBytes: Long =
-    (1L << 22) * aggFoldEntryBytes(2)
+    (1L << 22) * Engine.aggFoldEntryBytes(2)
 
   private[graft] def statsAggHotCap(numNumericCols: Int): Int =
     math.max(1 << 16, math.min(1 << 22,
-      (statsAggFoldBudgetBytes / aggFoldEntryBytes(numNumericCols)).toInt))
+      (statsAggFoldBudgetBytes / Engine.aggFoldEntryBytes(numNumericCols)).toInt))
   /** max unfolded log entries one statement will fold — see the
     * write-burst guard in statsAggregate. Raised 64k → 1M (r20, same
     * measurement): a 1M-entry fold costs well under a second; the
@@ -2955,4 +2947,19 @@ final class Engine(
     else if (d == d.toLong && math.abs(d) < 1e15) d.toLong.toString
     else new java.math.BigDecimal(d, new java.math.MathContext(6))
       .stripTrailingZeros.toPlainString
+}
+
+object Engine {
+
+  /** Estimated retained bytes per [[AggFold]] byPk entry at `numCols`
+    * numeric columns: HashMap.Entry + boxed Long key + Tuple3 + the
+    * hash table's own growth slack (~180 fixed) plus Array[Boolean]
+    * (1 B/col) + Array[Double] (8 B/col). Constants fit MEASUREMENT,
+    * not just object-layout arithmetic — graft.FoldMemProbe (post-GC
+    * heap deltas over the exact AggFold structure) measured
+    * 194 B/entry at k=2 (model 198), 459 at k=32 (468), 9234 at
+    * k=1000 (9180): within ±2% everywhere that matters.
+    */
+  private[graft] def aggFoldEntryBytes(numCols: Int): Long =
+    180L + 9L * numCols
 }

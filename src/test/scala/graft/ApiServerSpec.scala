@@ -241,4 +241,22 @@ class ApiServerSpec extends AnyFunSuite {
       assert(c5 == 200 && b5.contains("\"2\""))
     }
   }
+
+  test("keep-alive point queries are not held back by the delayed-ACK stall") {
+    // With Nagle on, each response body waits for the client's delayed
+    // ACK of the header segment: a ~40 ms floor per keep-alive request.
+    // One shared HttpClient keeps the connection alive across calls.
+    withServer { p =>
+      val q = """{"sql": "SELECT * FROM api_t WHERE id = 1"}"""
+      (1 to 10).foreach(_ => post(p, "/api/query", q))   // warm-up
+      val ms = (1 to 50).map { _ =>
+        val t0 = System.nanoTime()
+        val (c, b) = post(p, "/api/query", q)
+        assert(c == 200 && b.contains("10.5"), b)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val p50 = ms(ms.size / 2)
+      assert(p50 < 20.0, f"keep-alive point p50 $p50%.1f ms (all: ${ms.map(m => f"$m%.1f").mkString(" ")})")
+    }
+  }
 }

@@ -1,16 +1,18 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{ColdPointReader, Engine}
 
 /** Cold point-read metadata cache (VERDICT r4 #3): tier files are
-  * immutable, so footer stats are parsed once per file and every
-  * subsequent lookup prunes on the cached pk min/max — a warm-cache
-  * point read opens ONLY the files whose range covers the key, and a
-  * miss outside every range opens none (the reference's per-SSTable
-  * bloom + sparse-index cache, sstable.hpp).
+  * immutable, so footer stats and the pk bloom filter are read once per
+  * file and every subsequent lookup prunes in memory — a warm-cache
+  * point read opens ONLY the file that holds the key, and a miss opens
+  * none (the reference's per-SSTable bloom + sparse-index cache,
+  * sstable.hpp).
   */
 class ColdPointReaderSpec extends AnyFunSuite {
 
@@ -59,6 +61,125 @@ class ColdPointReaderSpec extends AnyFunSuite {
       assert(e.sql("SELECT v FROM cp WHERE id = 99999").rows.isEmpty)
       assert(ColdPointReader.dataFilesOpened.get() == opened2,
         "a miss outside all ranges must open no files")
+    }
+  }
+
+  test("overlapping tiers: the bloom gate opens only the holding file, none for an absent key") {
+    withDir { dir =>
+      val e = new Engine(spark, Some(dir), compactTrigger = 100)
+      assert(e.sql("CREATE TABLE ov (id BIGINT NOT NULL, v INT)").ok)
+      // tier t holds ids 4i+t: every tier's pk range covers [0, 4000),
+      // so min/max prunes nothing and ids 4i+3 are in range everywhere
+      for (t <- 0 until 3) {
+        e.batchPut("ov", (0 until 1000).map(i => Array[Any](4L * i + t, Int.box(t))))
+        e.forceFlush("ov")
+      }
+      val m = e.storeOf("ov").meta
+      val tiers = e.storeOf("ov").coldDirs
+      ColdPointReader.invalidateCache()
+      assert(ColdPointReader.lookup(spark, m, tiers, 3L).isEmpty) // warm metadata
+
+      val footers = ColdPointReader.footersParsed.get()
+      def opens(pk: Long, expect: Option[Int]): Long = {
+        val before = ColdPointReader.dataFilesOpened.get()
+        assert(ColdPointReader.lookup(spark, m, tiers, pk).map(_.values(1)) == expect)
+        ColdPointReader.dataFilesOpened.get() - before
+      }
+      assert(opens(2000L, Some(0)) == 1, "oldest-tier key: newer tiers must be bloom-rejected")
+      assert(opens(2001L, Some(1)) == 1, "middle-tier key: only its holder is opened")
+      assert(opens(3111L, None) == 0, "in-range key no tier holds must open no file")
+      assert(ColdPointReader.footersParsed.get() == footers, "warm lookups parse no footers")
+    }
+  }
+
+  test("in-memory bloom: no false negatives for any supported pk type") {
+    withDir { dir =>
+      val e = new Engine(spark, Some(dir), compactTrigger = 100)
+      // (DDL type, pk of i): even i are written, odd i are in-range misses
+      val types: Seq[(String, Int => Any)] = Seq(
+        "BIGINT" -> (i => 1000000007L * i),
+        "INT" -> (i => 7 * i - 5000),
+        "VARCHAR(20)" -> (i => f"key-$i%05d-\u00e9\ud83d\ude00"),
+        "TIMESTAMP" -> (i => 1700000000000000L + 1000003L * i))
+      types.zipWithIndex.foreach { case ((ddl, pkOf), n) =>
+        val table = s"bl$n"
+        assert(e.sql(s"CREATE TABLE $table (id $ddl NOT NULL, v INT)").ok)
+        e.batchPut(table, (0 until 2000 by 2).map(i => Array[Any](pkOf(i), Int.box(i))))
+        e.forceFlush(table)
+        val m = e.storeOf(table).meta
+        val tiers = e.storeOf(table).coldDirs
+        ColdPointReader.invalidateCache()
+        (0 until 2000 by 2).foreach { i =>
+          assert(ColdPointReader.lookup(spark, m, tiers, pkOf(i)).map(_.values(1)) == Some(i),
+            s"$ddl pk ${pkOf(i)} lost")
+        }
+        // the gate is live for this type: in-range misses almost never open
+        val opened = ColdPointReader.dataFilesOpened.get()
+        (1 until 2000 by 2).foreach { i =>
+          assert(ColdPointReader.lookup(spark, m, tiers, pkOf(i)).isEmpty)
+        }
+        val missOpens = ColdPointReader.dataFilesOpened.get() - opened
+        assert(missOpens <= 20, s"$ddl: $missOpens of 1000 in-range misses opened the file")
+      }
+    }
+  }
+
+  test("concurrent lookup / lookupMany over overlapping tiers match the model") {
+    withDir { dir =>
+      val e = new Engine(spark, Some(dir), compactTrigger = 100)
+      assert(e.sql("CREATE TABLE cc (id BIGINT NOT NULL, v INT)").ok)
+      // latest cold version per id: Some(v) live, None tombstone
+      val model = scala.collection.mutable.HashMap.empty[Long, Option[Int]]
+      def put(ids: Seq[Long], v: Int): Unit = {
+        e.batchPut("cc", ids.map(id => Array[Any](id, Int.box(v))))
+        ids.foreach(model(_) = Some(v))
+      }
+      put((0L until 8000L by 2), 0)
+      e.forceFlush("cc")
+      put((1L until 8000L by 4) ++ (0L until 8000L by 8), 1)
+      e.forceFlush("cc")
+      (0L until 8000L by 24).foreach { id =>
+        assert(e.sql(s"DELETE FROM cc WHERE id = $id").ok)
+        model(id) = None
+      }
+      put((3L until 8000L by 8), 2)
+      e.forceFlush("cc")
+      put((0L until 8000L by 5), 3)
+      e.forceFlush("cc")
+      val m = e.storeOf("cc").meta
+      val tiers = e.storeOf("cc").coldDirs
+      assert(tiers.size == 4)
+      def expected(id: Long): Option[(Any, Boolean)] =
+        model.get(id).map(v => (v.map(Int.box).orNull, v.isEmpty))
+      def actual(rv: Option[graft.engine.RowVersion]): Option[(Any, Boolean)] =
+        rv.map(r => (if (r.tombstone) null else r.values(1), r.tombstone))
+
+      ColdPointReader.invalidateCache()
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val threads = (0 until 8).map { t =>
+        new Thread(() => {
+          val rnd = new scala.util.Random(t)
+          try (0 until 300).foreach { op =>
+            // drop every cache now and then so reads race on the files
+            if (t == 0 && op % 100 == 99) ColdPointReader.invalidateCache()
+            if (rnd.nextBoolean()) {
+              val id = rnd.nextInt(8100).toLong
+              val got = actual(ColdPointReader.lookup(spark, m, tiers, id))
+              if (got != expected(id)) failures.add(s"lookup($id) = $got, want ${expected(id)}")
+            } else {
+              val ids = Seq.fill(1 + rnd.nextInt(20))(rnd.nextInt(8100).toLong)
+              val got = ColdPointReader.lookupMany(spark, m, tiers, ids)
+              ids.foreach { id =>
+                val g = actual(got.get(id))
+                if (g != expected(id)) failures.add(s"lookupMany($id) = $g, want ${expected(id)}")
+              }
+            }
+          } catch { case ex: Throwable => failures.add(s"thread $t: $ex") }
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(failures.isEmpty, failures.asScala.take(10).mkString("\n"))
     }
   }
 

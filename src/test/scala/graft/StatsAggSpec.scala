@@ -190,7 +190,7 @@ class StatsAggSpec extends AnyFunSuite {
         // (per-row fold bytes ~180+9k vs >=24k in the store's boxed
         // RowVersions), so the floor can never out-grow memory the
         // store already committed to
-        assert(cap.toLong * e.aggFoldEntryBytes(k) <= e.statsAggFoldBudgetBytes
+        assert(cap.toLong * Engine.aggFoldEntryBytes(k) <= e.statsAggFoldBudgetBytes
           || cap == (1 << 16),
           s"k=$k cap=$cap exceeds the fold byte budget off-floor")
         assert(cap >= (1 << 16) && cap <= (1 << 22))

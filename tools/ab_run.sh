@@ -14,7 +14,10 @@ for r in $(seq 1 "$N"); do
     line=$(cd "${dirs[$k]}" && SPARK_GRAFT_ONLY="$Q" SPARK_GRAFT_PRIOR=/dev/null \
       SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_SF_DIR="${AB_SF_DIR:-/root/testdata/sf0.1}" \
       sbt -batch "runMain graft.Bench" 2>/dev/null | grep -o '{"metric":"total".*' | head -1)
-    echo "{\"head\":\"${tags[$k]}\",\"run\":$r,\"cpus\":$CPUS,\"line\":$line}" >> "$OUT"
+    # sbt failed or printed no bench line: record that, not invalid JSON
+    if [ -n "$line" ]; then body="\"line\":$line"
+    else body='"line":null,"error":"no bench line"'; fi
+    echo "{\"head\":\"${tags[$k]}\",\"run\":$r,\"cpus\":$CPUS,$body}" >> "$OUT"
     echo "run $r ${tags[$k]}: $(echo "$line" | grep -o '"queries":{[^}]*}')"
   done
 done
